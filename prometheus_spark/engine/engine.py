@@ -143,6 +143,8 @@ class PromQLEngine:
         series index plays this role; for ad-hoc frames one dedup pass
         per engine is the honest equivalent.)"""
         if self._series_dim is None:
+            import uuid
+
             from pyspark import StorageLevel
 
             aggs = [F.first("labels").alias("labels")] + (
@@ -164,9 +166,17 @@ class PromQLEngine:
                     F.max((live & F.col("hist").isNotNull()).cast("int")).alias("__has_h"),
                     F.max((live & F.col("value").isNotNull()).cast("int")).alias("__has_f"),
                 ]
+            # the always-true filter on a per-build token gives this dim a
+            # plan no other build shares: Spark's cache manager serves any
+            # persisted plan with the same result, and two reads of one
+            # Parquet path compare equal even after new files landed — a
+            # second engine over a fresh read would get the first engine's
+            # older index (the optimizer drops the filter)
+            token = F.lit(uuid.uuid4().hex)
             self._series_dim = (
                 self._samples.groupBy("sig")
                 .agg(*aggs)
+                .where(token.isNotNull())
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             # one aggregate materializes the cache AND probes it: the

@@ -14,8 +14,8 @@ classic Prometheus text format (promtext.py) that this parser honors:
 
 Re-derived line grammar, not a translation.  The batch/streaming entry
 point ``parse_openmetrics_df`` is an Arrow-batched ``mapInPandas`` over
-raw lines — same shape as promtext; the Python inner loop runs once per
-scraped byte, never per query.
+raw lines (promtext's parser runs JVM-side instead); the Python inner
+loop runs once per scraped byte, never per query.
 """
 
 from __future__ import annotations

@@ -4,20 +4,22 @@ Reference: model/textparse/promparse.go (line-oriented format:
 ``metric{l="v",...} value [timestamp_ms]``, ``# HELP/# TYPE`` comments).
 Re-derived line grammar, not a translation.
 
-The batch/streaming entry point is ``parse_exposition_df`` — an
-Arrow-batched ``mapInPandas`` over raw lines (ingest parse is the one
-place a Python inner loop is acceptable: it runs once per scraped byte,
-not per query, and stays vectorized at the batch level).
+``parse_exposition_text`` parses one scrape body in Python (the scrape
+manager's path, and the reference the JVM parse is tested against).
+The batch/streaming entry point ``parse_exposition_df`` runs the same
+grammar as Catalyst expressions in one scan of the lines — no Python
+workers, no second pass over the source.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import re
-from typing import Iterator, Optional
+import unicodedata
+from typing import Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 _LINE_RE = re.compile(
     r"""^
@@ -133,247 +135,263 @@ def parse_exposition_text(
     return out
 
 
-# Arrow's pandas converter can't build map columns — the Python branch
-# ships parallel arrays and to_samples() assembles the map JVM-side.
-# ``sig``/``name``/``labels`` are optional precomputed columns: the JVM
-# fast path derives all three from ONE canonicalized pair string (a
-# single regexp_replace), which is ~3x cheaper than re-deriving them
-# from the arrays in to_samples (interpreted higher-order transforms).
-# NULL means "derive from the arrays" (Python-parsed rows); ``name``
-# is also emitted by the Python branch (it knows it for free).
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("label_keys", T.ArrayType(T.StringType()), False),
-        T.StructField("label_values", T.ArrayType(T.StringType()), False),
-        T.StructField("t", T.LongType(), False),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("sig", T.StringType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField(
-            "labels", T.MapType(T.StringType(), T.StringType()), True
-        ),
-    ]
-)
+# --- one-scan JVM parse -------------------------------------------------------
+#
+# ``parse_exposition_df`` runs the whole grammar ``parse_exposition_text``
+# accepts as Catalyst expressions over one scan of the lines.  The Java
+# regexes below restate ``_LINE_RE``/``parse_labelblob_utf8`` with the
+# label blob spelled out as a strict pair list: the Python ``.*`` blob ends
+# at the LAST ``}`` whose tail parses, and a valid tail (float token,
+# digits, whitespace) never holds a ``}``, so the two pick the same blob.
+# Python's ``\s``/``str.strip`` whitespace is Unicode White_Space plus
+# U+001C..U+001F; ``\d`` and ``float()`` take any Unicode decimal digit,
+# so numeric tokens admit non-ASCII characters here and are mapped to
+# ASCII with a table built from ``unicodedata`` (anything left over is
+# not a digit and fails the line).  Each row is one line: a line break
+# inside a row is only accepted as leading/trailing whitespace.
+#
+# Spark's generated code compares a regex literal with its cached copy on
+# every row, so the patterns are kept short.
+_KV, _PS = "\u001E", "\u001F"  # model.labels KV_SEP / PAIR_SEP
 
 
-# Fast-path classifier: a line is JVM-parseable when it has a classic
-# metric name, a brace block of classic keys with BACKSLASH-FREE quoted
-# values (no escapes ⇒ every '"' is structural, so the blob splits on
-# '",' boundaries without a state machine), a numeric/inf/nan value
-# token, and an optional ≤18-digit timestamp.  Everything else (UTF-8
-# quoted names, escaped label values, exotic float spellings like
-# '1_0' or 'infinity', oversized timestamps) takes the Python parser.
-# Values are additionally required free of the \x1e/\x1f canonical-sig
-# separator bytes: the fast path canonicalizes the pair block into a
-# separator-joined string (one regexp_replace feeding both str_to_map
-# and the signature), which such values would corrupt — they route to
-# the exact Python parser instead.
-_FAST_PAIR = '[a-zA-Z_][a-zA-Z0-9_]*\\s*=\\s*"[^"\\\\\u001E\u001F]*"'
-_FAST_LINE_RE = (
-    r"^[a-zA-Z_:][a-zA-Z0-9_:]*"
-    r"(\{\s*(" + _FAST_PAIR + r"(\s*,\s*" + _FAST_PAIR + r")*(\s*,)?\s*)?\})?"
-    r"\s+([+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
-    r"|[+-]?(?:[iI][nN][fF]|[nN][aA][nN]))"
-    r"(\s+-?[0-9]{1,18})?\s*$"
-)
+class _Grammar:
+    """The Java-regex spelling of the exposition line grammar."""
+
+    def __init__(self):
+        # the patterns run with (?U): \s is Unicode White_Space
+        WS = r"[\x1C-\x1F\s]"  # str.strip(): may hold \n
+        WSI = r"[\x1C-\x1F\s&&[^\n]]"  # \s inside a line
+        D = r"[0-9[^\x00-\x7F\s]]"  # digit candidates, see above
+        DP = f"{D}++(?:_{D}++)*+"  # float() digitpart: '_' between digits
+        # quoted-string body, still escaped; unrolled so Java does not
+        # recurse once per character
+        ESC = r'[^"\\\n]*+(?:\\[^\n][^"\\\n]*+)*+'
+        KEY = "[a-zA-Z_][a-zA-Z0-9_]*+"
+        PAIR = f'(?:{KEY}|"{ESC}"){WSI}*+={WSI}*+"{ESC}"'
+        PAIRS = f"{PAIR}(?:{WSI}*+,{WSI}*+{PAIR})*+"
+        # after the last pair: a comma, then a remainder that strips to
+        # '' or ','; a blob without pairs strips to '' or ','
+        TAIL = f"{WSI}*+(?:,{WSI}*+(?:,{WSI}*+)?)?"
+        NONE = f",?{WSI}*+"
+        CLASSIC = (
+            f"([a-zA-Z_:][a-zA-Z0-9_:]*+)"
+            f"(?:\\{{{WSI}*+(?:({PAIRS}){TAIL}|{NONE})\\}})?"
+        )
+        QUOTED = (
+            f'\\{{{WSI}*+(?:("{ESC}"){WSI}*+(?:,{WSI}*+(?:({PAIRS}){TAIL}|{NONE}))?'
+            f"|({PAIRS}){TAIL}|{NONE})\\}}"
+        )
+        EXP = f"(?:[eE][+-]?{DP})?"
+        VALUE = f"[+-]?(?:(?:{DP})?\\.{DP}{EXP}|{DP}\\.?{EXP}|[iI][nN][fF](?:[iI][nN][iI][tT][yY])?|[nN][aA][nN])"
+        # group 1 is the first character after leading whitespace when the
+        # line holds no backslash and no separator byte (nothing to
+        # unescape, nothing to collide with): most lines skip both checks
+        CLEAN = f"(?:(?=([^\\\\{_KV}{_PS}])[^\\\\{_KV}{_PS}]*+\\z))?"
+        # groups: 2 name, 3 pairs, 4 quoted name (with its quotes, as
+        # '""' names a metric ''), 5/6 pairs, 7 value, 8 ts
+        LINE = (
+            f"{WS}*+{CLEAN}(?:{CLASSIC}|{QUOTED}){WSI}++({VALUE})"
+            f"(?:{WSI}++(-?{D}++))?{WS}*+\\z"
+        )
+        self.line = f"(?U)^{LINE}"
+        # value, ts, name, quoted name, clean, pairs: no field holds a raw
+        # line break, so splitting on it is exact; any other row matches
+        # the second branch and comes out with an empty value field
+        self.line_or_any = f"(?U)^(?:{LINE}|[\\s\\S]*+)"
+        self.line_parts = "$7\n$8\n$2\n$4\n$1\n$3$5$6"
+        self.skip = f"(?U)^{WS}*+(?:#[^\\n]*+)?{WS}*+\\z"
+        # one pair (+ the comma after it): 1 key, 2 quoted key, 3 value
+        self.pair = (
+            f'(?U)(?:({KEY})|"({ESC})"){WSI}*+={WSI}*+"({ESC})"(?:{WSI}*+,{WSI}*+)?'
+        )
+        # _unescape in two pair-aligned passes: \n escapes (an odd run of
+        # backslashes before n) first, then \\ and \"; other pairs stay
+        self.unesc_nl = r"(?<!\\)((?:\\\\)*+)\\n"
+        self.unesc_bq = r'\\([\\"])'
+        # two pairs with one key are adjacent in the sorted signature
+        # (matched against PS + signature: a literal first char is cheap)
+        self.dup_key = f"{_PS}([^{_KV}]*+){_KV}[^{_PS}]*+{_PS}\\1{_KV}"
+        wide = [c for c in range(0x80, 0x110000) if chr(c).isdecimal()]
+        self.digits_from = "".join(map(chr, wide))
+        self.digits_to = "".join(str(unicodedata.decimal(chr(c))) for c in wide)
 
 
-def _fast_parse_frame(src, s, default_ts):
-    """Fast-classified lines -> PARSED_SCHEMA columns, all JVM-side.
+@functools.lru_cache(maxsize=None)
+def _grammar() -> _Grammar:
+    return _Grammar()
 
-    ONE regexp_replace canonicalizes the pair block ``k1="v1",k2="v2"``
-    into the separator-joined string ``k1\\x1ev1\\x1fk2\\x1ev2`` - the
-    labels map is then a plain ``str_to_map`` and the canonical sig a
-    sort+join of the split pairs plus the ``__name__`` pair.  This
-    replaces the previous per-pair array transforms (interpreted
-    higher-order expressions, CodegenFallback - measured ~2.2 s of the
-    4.6 s append stage at 4.5M lines) and the per-row re-derivation of
-    the sig from the arrays in ``to_samples`` (the classifier guarantees
-    values are free of ``\\x1e``/``\\x1f``, so the canonicalization is
-    lossless).  Pair-string sort order equals (key, value) struct order
-    because ``\\x1e`` sorts below every character legal in a classic
-    label key.
 
-    Two-stage projection with a non-deterministic no-op on the canon
-    string: sort_array is a CodegenFallback expression that re-evaluates
-    its whole child tree interpreted - anchoring canon as a materialized
-    attribute (CollapseProject keeps non-deterministic outputs
-    referenced more than once in their own Project) makes the fallback
-    read a row field instead of re-running the regex chain per row
-    (guide 4.4's duplicate-evaluation fix, applied to an expression)."""
+def _unescape_col(c):
+    """``_unescape`` as a column expression (rows without a backslash
+    skip both passes)."""
     from pyspark.sql import functions as F
 
-    KV, PS = "\u001E", "\u001F"
-    name = F.regexp_extract(s, r"^([a-zA-Z_:][a-zA-Z0-9_:]*)", 1)
-    blob = F.regexp_extract(s, r"^[a-zA-Z_:][a-zA-Z0-9_:]*\{(.*)\}", 1)
-    b1 = F.rtrim(F.ltrim(blob))
-    # each pair match consumes its own trailing comma/space; the result
-    # always ends with one \x1f per pair (stripped before use)
-    canon = F.regexp_replace(
-        b1,
-        '([a-zA-Z_][a-zA-Z0-9_]*)\\s*=\\s*"([^"]*)"\\s*,?\\s*',
-        "$1" + KV + "$2" + PS,
-    )
-    # value/timestamp live after the LAST '}' (value and ts are
-    # brace-free by classification; label values may contain '}')
-    tail = (
-        F.when(s.contains("{"), F.regexp_extract(s, r"\}([^}]*)$", 1))
-        .otherwise(F.regexp_replace(s, r"^[a-zA-Z_:][a-zA-Z0-9_:]*", ""))
-    )
-    tokens = F.split(F.trim(tail), r"\s+")
-    value_tok = F.element_at(tokens, 1)
-    lv = F.lower(value_tok)
-    value = (
-        F.when(lv.isin("inf", "+inf"), F.lit(float("inf")))
-        .when(lv == "-inf", F.lit(float("-inf")))
-        .when(lv.endswith("nan"), F.lit(float("nan")))
-        .otherwise(value_tok.cast("double"))
-    )
-    ts_parsed = F.when(
-        F.size(tokens) >= 2, F.element_at(tokens, 2).cast("long")
-    )
-    t = F.coalesce(ts_parsed, default_ts)
-    nd_noop = F.substring(F.expr("uuid()"), 1, 0)  # '' but non-deterministic
-    stage = src.select(
-        F.concat(canon, nd_noop).alias("__canon"),
-        name.alias("name"),
-        t.alias("t"),
-        value.alias("value"),
-    )
-    canon_c = F.col("__canon")
-    body = F.substring(canon_c, 1, F.length(canon_c) - 1)
-    npair = F.concat_ws(KV, F.lit("__name__"), F.col("name"))
-    empty = canon_c == ""
-    sig = F.when(empty, npair).otherwise(
-        F.array_join(
-            F.sort_array(F.concat(F.array(npair), F.split(body, PS, -1))), PS
-        )
-    )
-    name_map = F.create_map(F.lit("__name__"), F.col("name"))
-    labels = F.when(empty, name_map).otherwise(
-        F.map_concat(name_map, F.str_to_map(body, F.lit(PS), F.lit(KV)))
-    )
-    # parallel arrays derive from the one labels map (PARSED_SCHEMA
-    # contract with the Python branch); map_keys/map_values are codegen
-    # and insertion order - __name__ first, then source order - matches
-    # the previous per-pair transform construction
-    return stage.select(
-        F.map_keys(labels).alias("label_keys"),
-        F.map_values(labels).alias("label_values"),
-        "t",
-        "value",
-        sig.alias("sig"),
-        "name",
-        labels.alias("labels"),
-    )
+    g = _grammar()
+    return F.when(
+        c.contains("\\"),
+        F.regexp_replace(F.regexp_replace(c, g.unesc_nl, "$1\n"), g.unesc_bq, "$1"),
+    ).otherwise(c)
 
+
+def _ascii_digits(c):
+    """Map non-ASCII decimal digits to ASCII (``float``/``int`` accept
+    them); pure-ASCII tokens skip the translate."""
+    from pyspark.sql import functions as F
+
+    g = _grammar()
+    return F.when(
+        F.length(c) != F.octet_length(c), F.translate(c, g.digits_from, g.digits_to)
+    ).otherwise(c)
 
 
 def parse_exposition_df(
     lines: DataFrame, line_col: str = "line", ts_col: Optional[str] = None
 ) -> DataFrame:
-    """Raw-lines DataFrame → parsed samples (labels, t, value).
+    """Raw-lines DataFrame → parsed samples: ``label_keys``,
+    ``label_values``, ``t``, ``value``, ``sig``, ``name``, ``labels``.
 
     Works identically on a batch frame or a ``readStream`` frame (e.g.
     file/socket/Kafka source) — append ``.writeStream`` downstream for
     streaming ingest with checkpointing as the WAL equivalent.
 
-    Ingest is parse-bound (BENCH_INGEST: the Python line parser was ~87%
-    of pipeline cost), so lines matching a strict classifier regex are
-    parsed entirely JVM-side inside whole-stage codegen; only lines the
-    fast grammar can't express (escapes, quoted UTF-8 names, exotic
-    float spellings) go through the Arrow-batched Python parser.  Set
-    ``PROMSPARK_PROMTEXT_JVM=0`` to force the Python path everywhere
-    (parity sweeps / A-B timing).
+    One scan, all JVM: a single anchored regex validates each line and
+    splits it into value, timestamp, name and label pairs; the pairs are
+    canonicalized with one more ``regexp_replace`` into the separator-
+    joined string that feeds both ``str_to_map`` and the signature.  Rows
+    whose labels hold the separator bytes or repeat a key (last one wins,
+    as in the dict the Python parser builds) take an exact array-based
+    expression in the same projection.  Comment and blank lines are
+    dropped; any other line fails the job with "invalid exposition line".
+    Each row is one line (``parse_exposition_text`` splits a body first).
     """
-    import os
+    from pyspark import SparkContext
 
+    out = lines
+    for kind, cols in _parse_steps(SparkContext._active_spark_context, line_col, ts_col):
+        out = out.filter(cols) if kind == "filter" else out.select(*cols)
+    return out
+
+
+@functools.lru_cache(maxsize=8)
+def _parse_steps(sc, line_col: str, ts_col: Optional[str]) -> tuple:
+    """The select/filter steps of ``parse_exposition_df``.  Columns are
+    unresolved expressions, so they are built once per SparkContext and
+    column names: building them takes ~2k py4j calls, which would
+    otherwise cost each ingest round a third of a second."""
     from pyspark.sql import functions as F
 
-    cols = [line_col] + ([ts_col] if ts_col else [])
-    src = lines.select(*cols)
-
-    if os.environ.get("PROMSPARK_PROMTEXT_JVM", "1") != "0":
-        return _parse_hybrid_onepass(src, line_col, ts_col)
-    return _parse_python(src, line_col, ts_col)
-
-
-def _parse_hybrid_onepass(
-    src: DataFrame, line_col: str, ts_col: Optional[str]
-) -> DataFrame:
-    """Hybrid fast/slow parse — filter + union.
-
-    A true one-pass formulation was built and MEASURED SLOWER (round 12):
-    wrapping the fast parse in ``explode(array(struct(...)))`` so slow
-    lines' multi-sample arrays could share one projection costs +2.7 s
-    on 4.5M lines (per-row array+struct allocation through Generate) and
-    the null-input Arrow UDF node adds another ~1 s — 4.9 s total vs
-    1.8 s for this shape.  The union's duplicated work is small: the
-    classifier regex is 0.33 s/pass and the source re-scan is a
-    localCheckpoint/file read, while each branch keeps a flat
-    whole-stage-codegen projection.
-    """
-    from pyspark.sql import functions as F
-
-    s = F.trim(F.col(line_col))
-    is_content = (s != F.lit("")) & (~s.startswith("#"))
+    g = _grammar()
+    line = F.col(line_col)
     default_ts = F.col(ts_col).cast("long") if ts_col else F.lit(0).cast("long")
-    is_fast = is_content & s.rlike(_FAST_LINE_RE)
-    fast = _fast_parse_frame(src.filter(is_fast), s, default_ts)
-    slow = _parse_python(
-        src.filter(is_content & ~s.rlike(_FAST_LINE_RE)), line_col, ts_col
+    bad = lambda why: F.raise_error(  # noqa: E731
+        F.concat(F.lit(f"invalid exposition line{why}: "), F.col("__line"))
     )
-    return fast.unionByName(slow)
 
+    # spark_partition_id() >= 0 always holds; the non-deterministic guard
+    # keeps the line match a materialized column, or Catalyst would push
+    # the filter below this projection and run the regex twice per line
+    split = F.split(F.regexp_replace(line, g.line_or_any, g.line_parts), "\n")
+    matched = [
+        line.alias("__line"),
+        F.when(F.spark_partition_id() >= 0, split).alias("__p"),
+        default_ts.alias("__dts"),
+    ]
+    tok, ts, name, quoted, clean, pairs = (F.element_at("__p", i) for i in range(1, 7))
+    keep = (
+        F.when(tok != "", True)
+        .when(F.col("__line").rlike(g.skip), False)
+        .otherwise(bad(""))
+    )
 
-def _parse_python(src: DataFrame, line_col: str, ts_col: Optional[str]) -> DataFrame:
-    """The Arrow-batched Python parser (full grammar)."""
-    import pandas as pd
+    qname = F.substring(quoted, F.lit(2), F.length(quoted) - 2)
+    clean = clean != ""
+    # a digit candidate the translate leaves non-ASCII fails the cast
+    number = F.replace(_ascii_digits(tok), F.lit("_"), F.lit("")).try_cast("double")
+    value = F.when(tok.endswith("n") | tok.endswith("N"), F.lit(float("nan"))).otherwise(
+        F.coalesce(number, bad(""))
+    )
+    t = F.when(ts == "", F.col("__dts")).otherwise(
+        F.coalesce(_ascii_digits(ts).try_cast("long"), bad(" (timestamp)"))
+    )
+    no_sep = F.lit(True)
+    for c in (pairs, quoted):
+        for sep in (_KV, _PS):
+            no_sep = no_sep & (F.instr(c, sep) == 0)
+    unescape = lambda c: F.when(clean, c).otherwise(_unescape_col(c))  # noqa: E731
+    nm = F.when(name != "", name).otherwise(unescape(qname))
+    # fast path: '__name__' KV name (PS key KV value)*, one string that is
+    # both the labels map (str_to_map) and the signature (sorted split)
+    canon = unescape(F.regexp_replace(pairs, g.pair, f"{_PS}$1$2{_KV}$3"))
+    fields = [
+        "__line",
+        (name != "").alias("__classic"),
+        quoted.alias("__q"),
+        pairs.alias("__pairs"),
+        nm.alias("__name"),
+        F.concat(F.lit("__name__" + _KV), nm, canon).alias("__full"),
+        (((name != "") | (quoted != "")) & (clean | no_sep)).alias("__ok"),
+        t.alias("t"),
+        value.alias("value"),
+    ]
 
-    from prometheus_spark.shipping import ensure_shipped
+    # one projection: the signature, the fast-path verdict (no repeated
+    # key) and the labels map share their subexpressions
+    sig = F.array_join(F.sort_array(F.split("__full", _PS, -1)), _PS)
+    fast = ~F.concat(F.lit(_PS), sig).rlike(g.dup_key) & F.col("__ok")
+    signed = [
+        "*",
+        sig.alias("__sig"),
+        fast.alias("__fast"),
+        F.when(fast, F.str_to_map("__full", F.lit(_PS), F.lit(_KV))).alias("__labels"),
+    ]
 
-    ensure_shipped(src.sparkSession)
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out_k, out_vv, out_t, out_v = [], [], [], []
-            out_n = []
-            for i, line in enumerate(pdf[line_col]):
-                default_ts = int(pdf[ts_col].iloc[i]) if ts_col else 0
-                line = (line or "").strip()
-                if not line or line.startswith("#"):
-                    continue
-                for labels, t, v in parse_exposition_text(line, default_ts):
-                    out_k.append(list(labels.keys()))
-                    out_vv.append(list(labels.values()))
-                    out_t.append(t)
-                    out_v.append(v)
-                    out_n.append(labels.get("__name__"))
-            # explicit dtypes: an empty partition would otherwise default
-            # to float64 columns, which Arrow can't cast to list<string>
-            yield pd.DataFrame(
-                {
-                    "label_keys": pd.Series(out_k, dtype=object),
-                    "label_values": pd.Series(out_vv, dtype=object),
-                    "t": pd.Series(out_t, dtype="int64"),
-                    "value": pd.Series(out_v, dtype="float64"),
-                    # sig/labels NULL ⇒ to_samples derives them from the
-                    # arrays (exact canonical struct-sort path; Arrow
-                    # can't marshal dicts to a map column from pandas)
-                    "sig": pd.Series([None] * len(out_t), dtype=object),
-                    "name": pd.Series(out_n, dtype=object),
-                    "labels": pd.Series([None] * len(out_t), dtype=object),
-                }
-            )
-
-    parsed = src.mapInPandas(batches, PARSED_SCHEMA)
-    # pandas→Arrow folds float NaN into null; the parser itself never
-    # emits null (every sample line has a float value), so any null here
-    # IS a NaN sample — restore it (a scraped NaN must ingest as NaN)
-    from pyspark.sql import functions as F
-
-    return parsed.withColumn(
-        "value", F.coalesce(F.col("value"), F.lit(float("nan")))
+    # exact path, for the rows that are not __fast: key/value arrays with
+    # each key's last value at its first position (dict.update)
+    nm, fast = F.col("__name"), F.col("__fast")
+    has_name = F.col("__classic") | (F.col("__q") != "")
+    ks, qs, vs = (F.regexp_extract_all("__pairs", F.lit(g.pair), i) for i in (1, 2, 3))
+    none = F.array().cast("array<string>")
+    ak = F.concat(
+        F.when(has_name, F.array(F.lit("__name__"))).otherwise(none),
+        F.zip_with(ks, qs, lambda k, q: F.concat(k, _unescape_col(q))),
+    )
+    av = F.concat(
+        F.when(has_name, F.array(nm)).otherwise(none), F.transform(vs, _unescape_col)
+    )
+    dk = F.array_distinct(ak)
+    dv = F.transform(
+        dk,
+        lambda k: F.element_at(
+            av, (F.size(ak) + 1 - F.array_position(F.reverse(ak), k)).cast("int")
+        ),
+    )
+    x_sig = F.array_join(
+        F.sort_array(F.zip_with(dk, dv, lambda k, v: F.concat_ws(_KV, k, v))), _PS
+    )
+    exact = [
+        *("__line", "__name", "__sig", "__fast", "__labels", "t", "value"),
+        F.when(~fast, F.map_from_arrays(dk, dv)).alias("__xlabels"),
+        F.when(~fast, x_sig).alias("__xsig"),
+    ]
+    labels = F.when(fast, F.col("__labels")).otherwise(F.col("__xlabels"))
+    x_name = F.try_element_at("__xlabels", F.lit("__name__"))
+    final = [
+        F.map_keys(labels).alias("label_keys"),
+        F.map_values(labels).alias("label_values"),
+        "t",
+        "value",
+        F.when(fast, F.col("__sig")).otherwise(F.col("__xsig")).alias("sig"),
+        F.when(fast, nm).otherwise(F.coalesce(x_name, bad(" (no metric name)"))).alias("name"),
+        labels.alias("labels"),
+    ]
+    return (
+        ("select", matched),
+        ("filter", keep),
+        ("select", fields),
+        ("select", signed),
+        ("select", exact),
+        ("select", final),
     )
 
 
@@ -406,10 +424,9 @@ def to_samples(parsed: DataFrame) -> DataFrame:
         "CAST(nullif(array_position(label_keys, '__name__'), 0) AS INT))"
     )
     labels = F.map_from_arrays("label_keys", "label_values")
-    # JVM-fast-parsed rows carry sig/name/labels precomputed from the
-    # canonicalized pair string (see _fast_parse_frame); NULL rows
-    # (Python-parsed, other parsers) fall back to the array derivation —
-    # coalesce is lazily evaluated in codegen, so fast rows never pay it
+    # parse_exposition_df rows carry sig/name/labels already; NULL rows
+    # (other parsers) fall back to the array derivation — coalesce is
+    # lazily evaluated, so rows that carry them never pay it
     if "sig" in cols:
         sig = F.coalesce(F.col("sig"), sig)
     if "name" in cols:

@@ -184,3 +184,35 @@ def test_ordered_output_sorted_with_guard(spark):
     eng = PromQLEngine(spark, samples_from_rows(spark, rows))
     got = [r["sig"] for r in eng.instant_query("m", 1_000).collect()]
     assert got == sorted(got)
+
+
+def test_series_index_fresh_across_engines(spark, tmp_path):
+    # a rules engine and a query API over one store: the second engine,
+    # built over a fresh read after a new block landed, must index the new
+    # series instead of being served the first engine's persisted index
+    from prometheus_spark.storage import read_samples, write_samples
+
+    store = tmp_path / "store"
+
+    def block(name, metric):
+        rows = [({"__name__": metric, "job": "j"}, 0, 1.0)]
+        write_samples(samples_from_rows(spark, rows), str(store / f"block={name}"))
+
+    block("1", "a")
+    first = PromQLEngine(spark, read_samples(spark, str(store)))
+    second = None
+    try:
+        assert first.instant_query("a", 0).count() == 1
+        assert first._series_count == 1
+        block("2", "b")
+        second = PromQLEngine(spark, read_samples(spark, str(store)))
+        assert second.samples.filter("name = 'b'").count() == 1
+        assert second.instant_query("b", 0).count() == 1
+        assert second._series_count == 2
+        # the first engine keeps the snapshot it was built over
+        assert first._series_count == 1
+        assert first.instant_query("b", 0).count() == 0
+    finally:
+        for eng in (first, second):
+            if eng is not None:
+                eng.release_series_dim()

@@ -5,13 +5,13 @@ exposition parsers into the canonical samples layout
 (scrape/scrape.go:829 append loop; tsdb/head_bench_test.go appender
 throughput) — re-expressed as the Spark pipeline:
 
-    bodies → explode(split(lines)) → mapInPandas parse → to_samples
+    bodies → explode(split(lines)) → JVM exposition parse → to_samples
 
 Three timed stages isolate the bottleneck (each consumes its outputs —
 count() alone would let Catalyst prune the parse work):
 
     lines   JVM-side split/explode + line materialization
-    parse   + the Arrow-batched Python exposition parser
+    parse   + the exposition parser (one scan of Catalyst expressions)
     append  + JVM map assembly, sig hash, canonical projection
 
 plus the same full pipeline under Structured Streaming (file source →
@@ -130,7 +130,7 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         return best
 
-    # warm-up: compile codegen + spin Arrow python workers on a slice
+    # warm-up: compile the parse and append codegen on a slice
     warm = lines.limit(5000)
     to_samples(parse_exposition_df(warm)).agg(
         F.count("*"), F.sum(F.crc32(F.col("sig")))
@@ -139,7 +139,7 @@ def main() -> None:
     results = {}
     # stage: lines (JVM only — split/explode/materialize)
     results["lines_sec"] = timed(lines, [F.count("*"), F.sum(F.length("line"))])
-    # stage: + python parse (consume parsed outputs)
+    # stage: + exposition parse (consume parsed outputs)
     parsed = parse_exposition_df(lines)
     results["parse_sec"] = timed(
         parsed, [F.count("*"), F.sum("t"), F.sum("value")]
